@@ -100,7 +100,7 @@ BENCH_QUERIES = [
     "pq_recall_sweep",
     # round-7: ANCE-style hard-negative mining off the ADC shortlist,
     # and the OPQ-style balanced-permutation A/B (trains a second
-    # quantizer — deliberately NOT a shared-index consumer)
+    # quantizer next to the shared one)
     "hard_negative_mine",
     "pq_opq_compare",
     # round-6 late: lexical+semantic fusion, the KMV sketch, and the
@@ -130,8 +130,7 @@ BENCH_QUERIES = [
     "knn_adc_label_eval",
     # round-10: the index-health monitor — per-epoch quantization
     # error under the frozen epoch-0 codebook, the re-train decision
-    # surface (trains its OWN epoch-slice codebook; not a
-    # shared-pq-index consumer)
+    # surface (trains its OWN epoch-slice codebook)
     "pq_retrain_trigger",
     # round-7 late: derandomized isolation forest — multivariate
     # outlier detection over the quality-feature space
@@ -268,6 +267,7 @@ def main() -> None:
     # sf0.1 were ~30% pure task-launch tax.
     spark = get_spark("convoy-spark-bench", data_dir=sf_dir)
     from convoy_spark.queries import QUERIES
+    from convoy_spark.queries.shared import REGISTRY
 
     names = [n for n in BENCH_QUERIES if n in QUERIES]
     # Optional subset filter (comma-separated names) — used by the
@@ -302,111 +302,12 @@ def main() -> None:
     # same artifact's (late-session) fast_profile. Burn the first
     # timed queries untimed a few times so the first line item starts
     # at the same JIT temperature as the fiftieth.
-    #
-    # In SUBSET mode (SPARK_GRAFT_BENCH_ONLY) the first names are the
-    # family's OWN queries — burning them would pre-materialize the
-    # family's session-shared builds untimed and destroy exactly the
-    # build accounting subset runs exist to measure (the r10 knng-sf10
-    # incident: _shared_knn_graph_build recorded 0.09 s after the burn
-    # had already built the graph). Burn NEUTRAL queries instead:
-    # aggregate scans that share no frame with any family.
-    _burns = (
-        names[:2]
-        if not only
-        else [n for n in ("pricing_summary", "conditional_agg") if n not in keep]
-    )
-    for _burn_name in _burns:
+    for _burn_name in names[:2]:
         for _ in range(3):
             QUERIES[_burn_name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
 
-    # Shared materialized intermediates (queries.treestats
-    # .shared_descendant_pairs, queries.dedup.shared_lsh_pairs): the
-    # tree family and the dedup family each aggregate one deterministic
-    # frame that is localCheckpointed once per session. Time those
-    # builds EXPLICITLY as their own line items, counted into the
-    # total — otherwise the build cost would land in an untimed warm-up
-    # and vanish from every recorded number. Consumers below then
-    # measure their true steady-state (aggregate-from-materialized)
-    # cost, which is what a pipeline run pays per query.
-    from convoy_spark.queries.dedup import shared_lsh_pairs
-    from convoy_spark.queries.similarity import shared_ivf_index, shared_pq_index
-    from convoy_spark.queries.treestats import shared_descendant_pairs
-
-    _TREE_CONSUMERS = {
-        "tree_stats",
-        "tree_engagement",
-        "tree_metric_mad",
-        "root_stats_fastpath",
-    }
-    _LSH_CONSUMERS = {"minhash_lsh_neardup", "dedup_clusters", "split_contamination"}
-    _PQ_CONSUMERS = {
-        "pq_rerank_topk",
-        "ann_ivfpq_topk",
-        "pq_recall_sweep",
-        "hard_negative_mine",
-    }
-    _IVF_CONSUMERS = {"ann_ivfpq_topk", "pq_recall_sweep"}
-    _LPA_CONSUMERS = {"label_propagation_communities", "community_rollup"}
-    _KNNG_CONSUMERS = {
-        "knn_graph_ivf",
-        "semantic_communities",
-        "community_text_profile",
-    }
-
-    def _materialize_knng(spark, sf_dir):
-        from convoy_spark.queries.similarity import shared_knn_graph
-
-        shared_knn_graph(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def _materialize_knng_labels(spark, sf_dir):
-        # round-10: the LPA-over-knng label frame went session-shared
-        # (_knng_labels) — without this explicit line item its build
-        # would hide in the first consumer's untimed warm-up pass
-        from convoy_spark.queries.similarity import _knng_labels
-
-        _knng_labels(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def _materialize_lpa(spark, sf_dir):
-        from convoy_spark.queries.graph import _copurchase_labels
-
-        _copurchase_labels(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def _materialize_pq(spark, sf_dir):
-        # the tuple frames are lazily checkpointed; force the blocks
-        # so consumers measure steady-state index reads
-        for frame in shared_pq_index(spark, sf_dir):
-            frame.write.format("noop").mode("overwrite").save()
-
-    def _materialize_ivf(spark, sf_dir):
-        for frame in shared_ivf_index(spark, sf_dir):
-            frame.write.format("noop").mode("overwrite").save()
-
-    for label, builder, consumers in [
-        ("_shared_tree_pairs_build", shared_descendant_pairs, _TREE_CONSUMERS),
-        ("_shared_lsh_pairs_build", shared_lsh_pairs, _LSH_CONSUMERS),
-        ("_shared_pq_index_build", _materialize_pq, _PQ_CONSUMERS),
-        ("_shared_ivf_index_build", _materialize_ivf, _IVF_CONSUMERS),
-        ("_shared_lpa_labels_build", _materialize_lpa, _LPA_CONSUMERS),
-        ("_shared_knn_graph_build", _materialize_knng, _KNNG_CONSUMERS),
-        (
-            "_shared_knng_labels_build",
-            _materialize_knng_labels,
-            {"semantic_communities", "community_text_profile"},
-        ),
-    ]:
-        if not consumers & set(names):
-            continue
-        t0 = time.perf_counter()
-        builder(spark, sf_dir)
-        timings[label] = round(time.perf_counter() - t0, 4)
     for name in names:
         # Construction INSIDE the timer: the iterative operators
         # (closure, tree stats) run their convergence loops eagerly
@@ -418,10 +319,15 @@ def main() -> None:
         # the iterative operators) checkpoint-block allocation, which
         # showed up as ±0.5 s run-to-run spread on the flagship/tree
         # queries (round-2 NEXT #5). Timed samples then measure the
-        # steady state a cluster would see.
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        # steady state a cluster would see. The session-shared builds
+        # (queries/shared.py) are timed by their registry wherever
+        # they first run — here or in the burn above — and become the
+        # _shared_<build>_build line items below; the warm-up records
+        # which builds each query reads.
+        with REGISTRY.recording(name):
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
         samples = []
         for _ in range(runs):
             t0 = time.perf_counter()
@@ -429,6 +335,9 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
         timings[name] = round(sorted(samples)[len(samples) // 2], 4)
+    builds = {b: f"_shared_{b}_build" for b in REGISTRY.seconds}
+    for b, label in builds.items():
+        timings[label] = round(REGISTRY.seconds[b], 4)
 
     # Secondary measurement: the CONVOY_EXACT_AGG=0 production profile
     # (functions/numeric.py exactness-contract note). The decimal-exact
@@ -479,21 +388,14 @@ def main() -> None:
     # a reader compares these to the DuckDB family totals directly
     # instead of reconstructing them from per-query lines.
     families = {}
-    for fam, build, consumers in [
-        ("tree", "_shared_tree_pairs_build", _TREE_CONSUMERS),
-        ("lsh", "_shared_lsh_pairs_build", _LSH_CONSUMERS),
-        ("pq", "_shared_pq_index_build", _PQ_CONSUMERS),
-        ("ivf", "_shared_ivf_index_build", _IVF_CONSUMERS),
-        ("lpa", "_shared_lpa_labels_build", _LPA_CONSUMERS),
-        ("knng", "_shared_knn_graph_build", _KNNG_CONSUMERS),
-    ]:
-        members = [build, *sorted(consumers)]
-        present = [m for m in members if m in timings]
-        if present:
-            families[fam] = {
-                "total": round(sum(timings[m] for m in present), 4),
-                "members": present,
-            }
+    for b, label in builds.items():
+        members = [label] + sorted(
+            q for q, read in REGISTRY.reads.items() if b in read and q in timings
+        )
+        families[REGISTRY.families[b]] = {
+            "total": round(sum(timings[m] for m in members), 4),
+            "members": members,
+        }
     # Hygiene flag (round-5 lesson: numbers collected while other
     # sessions run on the host are 3–6× inflated): record the host
     # load so a contended artifact self-documents instead of silently

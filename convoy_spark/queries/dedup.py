@@ -41,31 +41,25 @@ from convoy_spark.operators.dedup import (
     simhash_neardup,
 )
 from convoy_spark.queries.catalog import query
-from convoy_spark.queries.shared import session_cached
+from convoy_spark.queries.shared import shared_build
 from convoy_spark.tables import load_table
 
 NEARDUP_J = 0.8  # the corpus has planted near-dups at J ≈ 0.98
 
-# Three catalog queries consume the SAME verified LSH pair graph
-# (minhash_lsh_neardup, dedup_clusters, split_contamination); the
-# sketch→band→verify pipeline is by far their dominant cost, so
+# Several catalog queries consume the SAME verified LSH pair graph
+# (minhash_lsh_neardup, dedup_clusters, split_contamination,
+# dedup_keep_best, domain_dedup_rates); the sketch→band→verify
+# pipeline is by far their dominant cost, so
 # materialize it once per (session, sf_dir) — the cross-query
 # shared-frame pattern from queries.treestats.shared_descendant_pairs.
 # Deterministic, so results are unchanged; only recomputation is
 # removed. The DuckDB oracles still re-derive their pair CTE per
 # query.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_build("lsh_pairs", family="lsh")
 def shared_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_cached(
-        _PAIRS_CACHE,
-        spark,
-        sf_dir,
-        lambda: minhash_lsh_neardup(
-            load_table(spark, sf_dir, "documents"), min_jaccard=NEARDUP_J
-        ),
-    )
+    return minhash_lsh_neardup(
+        load_table(spark, sf_dir, "documents"), min_jaccard=NEARDUP_J
+    ).localCheckpoint(eager=False)
 
 # ---- shared oracle CTE fragments ---------------------------------------
 

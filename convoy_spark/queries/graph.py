@@ -19,6 +19,7 @@ from convoy_spark.operators.graph import (
 )
 from convoy_spark.functions.numeric import dsum, sql_dsum
 from convoy_spark.queries.catalog import query
+from convoy_spark.queries.shared import shared_build
 from convoy_spark.tables import load_table
 
 # Recursive climb to the root — the oracle twin of pointer jumping.
@@ -289,9 +290,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_LPA_LABELS_CACHE: dict = {}
-
-
+@shared_build("lpa_labels", family="lpa")
 def _copurchase_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) — LPA communities over the co-purchase part graph,
     ONE label frame per (session, sf_dir): label_propagation already
@@ -299,16 +298,11 @@ def _copurchase_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes every consumer (the membership query, community_rollup)
     reuse the materialized labels instead of re-running the rounds —
     the shared_pq_index amortization pattern."""
-    from convoy_spark.queries.shared import session_cached_obj
-
-    def _build() -> DataFrame:
-        und = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
-        edges = und.select(
-            F.col("p").alias("u"), F.col("q").alias("v")
-        ).union(und.select(F.col("q").alias("u"), F.col("p").alias("v")))
-        return label_propagation(edges)
-
-    return session_cached_obj(_LPA_LABELS_CACHE, spark, sf_dir, _build)
+    und = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
+    edges = und.select(
+        F.col("p").alias("u"), F.col("q").alias("v")
+    ).union(und.select(F.col("q").alias("u"), F.col("p").alias("v")))
+    return label_propagation(edges)
 
 
 @query(

@@ -21,6 +21,7 @@ from convoy_spark.operators.similarity import (
     cosine_topk,
 )
 from convoy_spark.queries.catalog import query
+from convoy_spark.queries.shared import shared_build
 from convoy_spark.tables import load_table
 
 from convoy_spark.operators.pca import (
@@ -774,29 +775,21 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 KNNG_K = 5
 KNNG_PROBE = 2
 
-_KNN_GRAPH_CACHE: dict = {}
-
-
+@shared_build("knn_graph", family="knng")
 def shared_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE k-NN graph per (session, sf_dir) — the membership query and
     the communities query are both consumers (the shared_pq_index /
     _copurchase_labels amortization pattern); the N·k edge frame is
     lazily checkpointed so consumers reuse the materialized graph."""
     from convoy_spark.operators.similarity import knn_graph
-    from convoy_spark.queries.shared import session_cached_obj
 
-    return session_cached_obj(
-        _KNN_GRAPH_CACHE,
-        spark,
-        sf_dir,
-        lambda: knn_graph(
-            load_table(spark, sf_dir, "embeddings"),
-            k=KNNG_K,
-            n_probe=KNNG_PROBE,
-            target_cell=SEMDEDUP_TARGET_CELL,
-            min_cells=IVF_CELLS,
-        ).localCheckpoint(eager=False),
-    )
+    return knn_graph(
+        load_table(spark, sf_dir, "embeddings"),
+        k=KNNG_K,
+        n_probe=KNNG_PROBE,
+        target_cell=SEMDEDUP_TARGET_CELL,
+        min_cells=IVF_CELLS,
+    ).localCheckpoint(eager=False)
 
 
 def _knn_graph_ctes() -> list[str]:
@@ -901,9 +894,7 @@ def _semantic_communities_oracle() -> str:
     """
 
 
-_KNNG_LABELS_CACHE: dict = {}
-
-
+@shared_build("knng_labels")
 def _knng_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) — LPA over the symmetrized shared k-NN graph, ONE
     label frame per (session, sf_dir): semantic_communities and the
@@ -912,18 +903,14 @@ def _knng_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     already checkpoints its final frame, so caching the handle makes
     every consumer reuse the materialized labels)."""
     from convoy_spark.operators.graph import label_propagation
-    from convoy_spark.queries.shared import session_cached_obj
 
-    def _build() -> DataFrame:
-        g = shared_knn_graph(spark, sf_dir)
-        edges = (
-            g.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-            .union(g.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-            .distinct()
-        )
-        return label_propagation(edges)
-
-    return session_cached_obj(_KNNG_LABELS_CACHE, spark, sf_dir, _build)
+    g = shared_knn_graph(spark, sf_dir)
+    edges = (
+        g.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .union(g.select(F.col("dst").alias("u"), F.col("src").alias("v")))
+        .distinct()
+    )
+    return label_propagation(edges)
 
 
 @query("semantic_communities", oracle=_semantic_communities_oracle())
@@ -1057,35 +1044,21 @@ from convoy_spark.operators.pq import (  # noqa: E402
     ann_pq_adc_topk,
     pq_codebooks,
 )
-from convoy_spark.queries.shared import session_cached_obj  # noqa: E402
 
 # One PQ index (codebook + code table + exploded frame) and one IVF
 # coarse index per (session, sf_dir): the flat-ADC, re-rank and
 # IVF-PQ queries are all consumers of the same build — exactly the
-# shared_lsh_pairs / shared_descendant_pairs amortization pattern, and
-# bench.py times the build as its own family line item.
-_PQ_INDEX_CACHE: dict = {}
-_IVF_INDEX_CACHE: dict = {}
-
-
+# shared_lsh_pairs / shared_descendant_pairs amortization pattern.
+@shared_build("pq_index", family="pq")
 def shared_pq_index(spark: SparkSession, sf_dir: str):
-    return session_cached_obj(
-        _PQ_INDEX_CACHE,
-        spark,
-        sf_dir,
-        lambda: pq_codebooks(load_table(spark, sf_dir, "embeddings")),
-    )
+    return pq_codebooks(load_table(spark, sf_dir, "embeddings"))
 
 
+@shared_build("ivf_index", family="ivf")
 def shared_ivf_index(spark: SparkSession, sf_dir: str):
     from convoy_spark.operators.similarity import ivf_index
 
-    return session_cached_obj(
-        _IVF_INDEX_CACHE,
-        spark,
-        sf_dir,
-        lambda: ivf_index(load_table(spark, sf_dir, "embeddings")),
-    )
+    return ivf_index(load_table(spark, sf_dir, "embeddings"))
 
 PQ_DIM = 64  # embeddings table dim (asserted by generate_subscripts)
 PQ_DS = PQ_DIM // PQ_SUB

@@ -25,7 +25,7 @@ from convoy_spark.operators.treestats import (
     tree_stats_pandas,
 )
 from convoy_spark.queries.catalog import query
-from convoy_spark.queries.shared import session_cached
+from convoy_spark.queries.shared import shared_build
 from convoy_spark.tables import load_table
 
 # The tree-family queries (tree_stats, tree_engagement,
@@ -40,15 +40,10 @@ from convoy_spark.tables import load_table
 # deliberately do NOT get the analogous treatment — each re-evaluates
 # its recursive CTE — because the oracle exists for value comparison,
 # not as the perf baseline's best case.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_build("tree_pairs", family="tree")
 def shared_descendant_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_cached(
-        _PAIRS_CACHE,
-        spark,
-        sf_dir,
-        lambda: descendant_pairs(forest_edges(spark, sf_dir)),
+    return descendant_pairs(forest_edges(spark, sf_dir)).localCheckpoint(
+        eager=False
     )
 
 # Every (ancestor, descendant, depth) pair incl. the depth-0 self pair

@@ -4,17 +4,21 @@ design note on why nothing stronger is exactly mergeable (the round-8
 verdict #8 deliverable; the OPQ measured-decline precedent applied to
 state design).
 
-**Why per-batch rank deltas do NOT merge.** The batch operator
+**Why per-batch class-id deltas do NOT merge.** The batch operator
 (operators/suffix.py) represents "these two corpus positions start
-the same ``window``-token sequence" as equality of a DENSE RANK built
-by prefix doubling. That rank is a global ordinal over the sorted
-distinct pair-key set — its VALUE is corpus-relative:
+the same ``window``-token sequence" as equality of a CLASS ID built by
+prefix doubling: round k+1 keys each position by the pair
+(id_k(pos), id_k(pos + 2^k)), the second taken with ``lead()`` over
+the per-doc position order, and names each class by its first corpus
+occurrence, ``min(struct(doc_id, pos))``. That id is a property of
+the whole corpus, not of one batch:
 
-- inserting ONE new distinct key (any new batch almost surely does)
-  increments every higher rank — a Θ(distinct-keys) renumbering, not
-  a per-batch delta; and the renumbering cascades through all
+- a batch holding an earlier occurrence of a class (a lower doc_id)
+  renames the whole class, and the renaming cascades through all
   log₂(window) doubling rounds, because round k+1's keys are PAIRS of
-  round-k ranks;
+  round-k ids; even with no renaming, a batch can name its own
+  positions only by looking up every round's ids over the whole
+  store — a corpus-sized join per round, not a per-batch delta;
 - the only batch-local key that survives corpus growth is the window
   CONTENT itself (the ``window``-token sequence), which is
   Θ(window) tokens per position — a window-times blowup of the store.
@@ -26,7 +30,7 @@ distinct pair-key set — its VALUE is corpus-relative:
   are not monotone under corpus growth for *other* documents — a new
   batch can turn any existing unique window into a repeat, so every
   stored doc's row is invalidated by any batch: the OUTPUT is not
-  incrementally maintainable either, independent of the rank
+  incrementally maintainable either, independent of the class-id
   representation.
 
 **What IS exactly mergeable:** the token-position store itself.

@@ -6,7 +6,10 @@
    on DuckDB — row count + sorted-column schema + order-insensitive
    value hash.
 
-Usage: python tools/driver_emulator.py [sf_dir]
+Usage: python tools/driver_emulator.py [--only q1,q2,...] [sf_dir]
+
+``--only`` checks just the named queries (a fast spot-check loop while
+iterating on a few of them); a name not in the catalog fails the run.
 """
 
 from __future__ import annotations
@@ -40,7 +43,18 @@ def value_hash(pdf: pd.DataFrame) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
+def _pop_only(argv: list[str]) -> list[str] | None:
+    """Remove ``--only q1,q2`` from ``argv`` and return the names."""
+    if "--only" not in argv:
+        return None
+    i = argv.index("--only")
+    names = argv[i + 1] if i + 1 < len(argv) else ""
+    del argv[i : i + 2]
+    return [s.strip() for s in names.split(",") if s.strip()]
+
+
 def main() -> int:
+    only = _pop_only(sys.argv)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spec = importlib.util.spec_from_file_location("entry_mod", "/root/repo/__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
@@ -85,7 +99,13 @@ def main() -> int:
         print(f"WARNING: {len(outside)} queries OUTSIDE driver's 50-entry window: {outside}")
     results = {}
     n_pass = n_fail = n_rows_only = 0
+    for name in only or []:
+        if name not in queries:
+            results[name] = {"status": "FAIL", "error": "not in catalog"}
+            n_fail += 1
     for name, fn in queries.items():
+        if only is not None and name not in only:
+            continue
         spdf = fn(spark, sf_dir).toPandas()
         if name not in oracles:
             results[name] = {"status": "rows_only", "rows": len(spdf)}

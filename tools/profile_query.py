@@ -1,14 +1,17 @@
 #!/usr/bin/env python
-"""Stage-level profile of one catalog query via the Spark event log.
+"""Time catalog queries bench-style and profile their stages via the
+Spark event log.
 
-Usage: python tools/profile_query.py <query> [sf_dir] [runs]
+Usage: python tools/profile_query.py <q1,q2,...> [sf_dir] [runs]
 
-Runs the query bench-style (1 warm-up + ``runs`` timed noop-sink
-executions) in a session with ``spark.eventLog.enabled``, then parses
-the event log and prints, for the timed window: per-job wall ranges
+Runs each query bench-style (1 warm-up + ``runs`` timed noop-sink
+executions, ``bench.py``'s protocol) in a ``get_spark`` session with the
+event log on, and prints per query the median, the samples and the
+loadavg (a contended sample self-documents). Then it parses the event
+log and prints, for each query's timed window: per-job wall ranges
 and, per stage, the wall duration, task count, summed task time, and
 the dominant metric split (executor compute / shuffle fetch / GC /
-scheduler+overhead) — the §7.1 "where is the time going" readout the
+scheduler+overhead) — the "where is the time going" readout the
 disabled UI would otherwise provide.
 """
 
@@ -17,8 +20,8 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,63 +30,47 @@ def main() -> int:
     if len(sys.argv) < 2:
         print(__doc__, file=sys.stderr)
         return 2
-    name = sys.argv[1]
+    names = [s.strip() for s in sys.argv[1].split(",") if s.strip()]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    runs = int(sys.argv[3]) if len(sys.argv) > 3 else 1
+    runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    log_dir = f"/tmp/spark-events-{uuid.uuid4().hex[:8]}"
-    os.makedirs(log_dir, exist_ok=True)
-
-    from pyspark.sql import SparkSession
-
-    # Build ONE session, with the eventLog confs set BEFORE the JVM
-    # launches — a throwaway pre-seed session would fix the JVM heap at
-    # its default and silently ignore spark.driver.memory below
-    # (round-10 ADVICE), so profiled runs would execute under different
-    # memory/GC conditions than the bench they diagnose.
-    from convoy_spark.session import _sized_shuffle_partitions, default_parallelism
-
-    n = default_parallelism()
-    shuffle_n = _sized_shuffle_partitions(sf_dir, n)
-    spark = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("convoy-spark-profile")
-        .config("spark.sql.shuffle.partitions", str(shuffle_n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .getOrCreate()
+    # The event log must be on before the JVM launches, and the session
+    # must be get_spark's own so profiled runs execute under the same
+    # confs, memory and PYTHONPATH as the bench they diagnose.
+    log_dir = tempfile.mkdtemp(prefix="spark-events-")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        f"--conf spark.eventLog.dir=file://{log_dir} "
+        "--conf spark.eventLog.compress=false pyspark-shell"
     )
-    spark.sparkContext.setLogLevel("WARN")
+    from convoy_spark.session import get_spark
+
+    spark = get_spark("convoy-spark-profile", data_dir=sf_dir)
     from convoy_spark.queries import QUERIES
 
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    def noop():
+    def noop(name):
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    noop()  # warm-up
-    spark.sparkContext.setJobDescription(f"timed:{name}")
-    t0 = time.time() * 1000
-    wall = []
-    for _ in range(runs):
-        s = time.perf_counter()
-        noop()
-        wall.append(time.perf_counter() - s)
-    t1 = time.time() * 1000
-    spark.sparkContext.setJobDescription(None)
+    windows = []
+    for name in names:
+        noop(name)  # warm-up
+        t0 = time.time() * 1000
+        samples = []
+        for _ in range(runs):
+            s = time.perf_counter()
+            noop(name)
+            samples.append(round(time.perf_counter() - s, 3))
+        windows.append((name, t0, time.time() * 1000))
+        med = sorted(samples)[len(samples) // 2]
+        print(
+            f"{name} @ {sf_dir}: median={med}s samples={samples} "
+            f"loadavg={os.getloadavg()[0]:.1f}"
+        )
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
-    print(f"{name}: wall={['%.2f' % w for w in wall]}")
     # Spark 4 rolling layout: eventlog_v2_<appId>/events_*; fall back
     # to the classic single file.
     v2 = os.path.join(log_dir, f"eventlog_v2_{app_id}")
@@ -101,41 +88,25 @@ def main() -> int:
 
     def _lines():
         for p in paths:
-            if p.endswith(".zstd"):
-                import io
-                import subprocess
-
-                raw = subprocess.run(
-                    ["zstd", "-dc", p], capture_output=True, check=True
-                ).stdout
-                yield from io.StringIO(raw.decode())
-            else:
-                with open(p) as fh:
-                    yield from fh
+            with open(p) as fh:
+                yield from fh
 
     for line in _lines():
         ev = json.loads(line)
         e = ev.get("Event")
         if e == "SparkListenerJobStart":
-            sub = ev.get("Submission Time", 0)
-            if sub < t0 or sub > t1:
-                continue
-            jid = ev["Job ID"]
-            jobs[jid] = {
-                "submit": sub,
-                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-            }
+            jobs[ev["Job ID"]] = {"submit": ev.get("Submission Time", 0)}
         elif e == "SparkListenerJobEnd":
             jid = ev["Job ID"]
             if jid in jobs:
                 jobs[jid]["end"] = ev.get("Completion Time", 0)
         elif e == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
-            sid = si["Stage ID"]
             sub = si.get("Submission Time")
-            if sub is None or sub < t0 or sub > t1:
+            if sub is None:
                 continue
-            stages[sid] = {
+            stages[si["Stage ID"]] = {
+                "submit": sub,
                 "name": si.get("Stage Name", "")[:70],
                 "wall": (si.get("Completion Time", 0) - sub) / 1000.0,
                 "tasks": si.get("Number of Tasks", 0),
@@ -165,37 +136,39 @@ def main() -> int:
             srm = tm.get("Shuffle Read Metrics") or {}
             st["fetch_ms"] += srm.get("Fetch Wait Time", 0)
 
-    njobs = len(jobs)
-    total_job_wall = sum(
-        (j.get("end", 0) - j["submit"]) / 1000.0 for j in jobs.values()
-    )
-    # gaps between jobs = driver-side planning/scheduling time
-    spans = sorted(
-        (j["submit"], j.get("end", j["submit"])) for j in jobs.values()
-    )
-    gap = 0.0
-    for (s1, e1), (s2, _) in zip(spans, spans[1:]):
-        if s2 > e1:
-            gap += (s2 - e1) / 1000.0
-    print(
-        f"jobs={njobs} job_wall_sum={total_job_wall:.2f}s "
-        f"inter-job driver gap={gap:.2f}s (planning/analysis)"
-    )
-    print(
-        f"{'sid':>4} {'wall_s':>7} {'tasks':>5} {'task_s':>7} {'cpu_s':>6} "
-        f"{'gc_s':>5} {'fetch_s':>7} {'sched_s':>7}  name"
-    )
-    for sid in sorted(stages, key=lambda s: -stages[s]["wall"]):
-        st = {**{"task_ms": 0, "gc_ms": 0, "fetch_ms": 0, "cpu_ns": 0,
-                 "ser_ms": 0}, **task_acc.get(sid, {}), **stages[sid]}
-        cpu_s = st["cpu_ns"] / 1e9
-        sched = max(st["task_ms"] / 1000.0 - cpu_s - st["gc_ms"] / 1000.0, 0)
-        print(
-            f"{sid:>4} {st['wall']:>7.2f} {st['tasks']:>5} "
-            f"{st['task_ms'] / 1000.0:>7.2f} {cpu_s:>6.2f} "
-            f"{st['gc_ms'] / 1000.0:>5.2f} {st['fetch_ms'] / 1000.0:>7.2f} "
-            f"{sched:>7.2f}  {st['name']}"
+    for name, t0, t1 in windows:
+        in_jobs = [j for j in jobs.values() if t0 <= j["submit"] <= t1]
+        in_stages = {
+            sid: st for sid, st in stages.items() if t0 <= st["submit"] <= t1
+        }
+        total_job_wall = sum(
+            (j.get("end", 0) - j["submit"]) / 1000.0 for j in in_jobs
         )
+        # gaps between jobs = driver-side planning/scheduling time
+        spans = sorted((j["submit"], j.get("end", j["submit"])) for j in in_jobs)
+        gap = 0.0
+        for (s1, e1), (s2, _) in zip(spans, spans[1:]):
+            if s2 > e1:
+                gap += (s2 - e1) / 1000.0
+        print(
+            f"{name}: jobs={len(in_jobs)} job_wall_sum={total_job_wall:.2f}s "
+            f"inter-job driver gap={gap:.2f}s (planning/analysis)"
+        )
+        print(
+            f"{'sid':>4} {'wall_s':>7} {'tasks':>5} {'task_s':>7} {'cpu_s':>6} "
+            f"{'gc_s':>5} {'fetch_s':>7} {'sched_s':>7}  name"
+        )
+        for sid in sorted(in_stages, key=lambda s: -in_stages[s]["wall"]):
+            st = {**{"task_ms": 0, "gc_ms": 0, "fetch_ms": 0, "cpu_ns": 0,
+                     "ser_ms": 0}, **task_acc.get(sid, {}), **in_stages[sid]}
+            cpu_s = st["cpu_ns"] / 1e9
+            sched = max(st["task_ms"] / 1000.0 - cpu_s - st["gc_ms"] / 1000.0, 0)
+            print(
+                f"{sid:>4} {st['wall']:>7.2f} {st['tasks']:>5} "
+                f"{st['task_ms'] / 1000.0:>7.2f} {cpu_s:>6.2f} "
+                f"{st['gc_ms'] / 1000.0:>5.2f} {st['fetch_ms'] / 1000.0:>7.2f} "
+                f"{sched:>7.2f}  {st['name']}"
+            )
     return 0
 
 
